@@ -464,26 +464,11 @@ def _word_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import bloom
-
-    return _membership_panel(
-        spark, sf_dir, bloom.build_bloom, bloom.ShardedBloom,
-        lambda n: bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=8, seed=42),
-        # cfg-derived bound: closed-form FPR x 1.5 sampling margin
-        lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4,
-        "zz",
-    )
+    return _membership_panel(spark, sf_dir, "bloom")
 
 
 def q_prefix_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42),
-        0.006,  # paper-ballpark bound at load<=0.95
-        "qq",
-    )
+    return _membership_panel(spark, sf_dir, "pf_bloom")
 
 
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1359,27 +1344,82 @@ def q_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _membership_panel(spark, sf_dir, build, handle_cls, cfg_factory, fpr_bound, prefix):
-    """cfg_factory: n_distinct_words -> config; fpr_bound: a float or a
-    callable(cfg) for closed-form bounds. The panel counts the word
-    stream ONCE and sizes the filter from that count (callers used to
-    run the identical distinct+count themselves just to build the
-    config — a doubled input scan, which at 100TB is the dominant cost)."""
-    from prefix_filter_spark.functions import register_contains_udf
+def _membership_kinds() -> dict:
+    """label -> (n_distinct_words -> config, FPR bound, UDF prefix): one
+    row per membership gate. The build and the probe handle follow from
+    the config's FilterKind; the bound is a float or a callable(cfg)
+    for closed-form bounds."""
+    from prefix_filter_spark.sketches import bfuse as bfm
+    from prefix_filter_spark.sketches import blocked_bloom as bb
+    from prefix_filter_spark.sketches import bloom
+    from prefix_filter_spark.sketches import cuckoo as ckm
+    from prefix_filter_spark.sketches import prefix_filter as pfm
+    from prefix_filter_spark.sketches import quotient as qfm
+    from prefix_filter_spark.sketches import ribbon as rbm
+    from prefix_filter_spark.sketches import two_choice as tc
+    from prefix_filter_spark.sketches import xor as xorm
 
-    words = _word_stream(spark, sf_dir).distinct()
-    n = words.count()
+    def pf(spare):
+        return lambda n: pfm.PrefixFilterConfig(
+            n_capacity=n, num_shards=8, seed=42, spare_kind=spare
+        )
+
+    # closed-form FPR x 1.5 sampling margin
+    closed_form = lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4  # noqa: E731
+    return {
+        "bloom": (lambda n: bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=8, seed=42),
+                  closed_form, "zz"),
+        "blocked_bloom": (lambda n: bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, num_shards=8, seed=42),
+                          0.05, "bbf"),
+        "two_choice": (lambda n: tc.TwoChoiceConfig(n_capacity=n, num_shards=8, seed=42), 0.02, "tc"),
+        "cuckoo": (lambda n: ckm.CuckooConfig(n_capacity=n, num_shards=8, seed=42), 0.01, "ck"),
+        # 0.006: paper-ballpark bound at load<=0.95
+        "pf_bloom": (pf("bloom"), 0.006, "qq"),
+        "pf_tc": (pf("tc"), 0.006, "pftc"),
+        "pf_cf": (pf("cuckoo"), 0.006, "pfcf"),
+        "pf_bbf": (pf("bbf"), 0.008, "pfbbf"),
+        "pf_impala": (pf("impala512"), 0.008, "pfimp"),
+        "xor": (lambda n: xorm.XorConfig(n_capacity=n, fingerprint_bits=8, num_shards=8, seed=42),
+                closed_form, "xr"),
+        "pf_xor": (pf("xor"), 0.006, "pfxr"),
+        "bfuse": (lambda n: bfm.BFuseConfig(n_capacity=n, fingerprint_bits=8, num_shards=4, seed=42),
+                  closed_form, "bfu"),
+        "ribbon": (lambda n: rbm.RibbonConfig(n_capacity=n, fingerprint_bits=8, num_shards=8, seed=42),
+                   closed_form, "rbn"),
+        "pf_ribbon": (pf("ribbon"), 0.006, "pfrbn"),
+        "quotient": (lambda n: qfm.QuotientFilterConfig(n_capacity=n, num_shards=8, seed=42),
+                     lambda cfg: cfg.theoretical_fpr() * 1.8 + 1e-4, "qf"),
+    }
+
+
+def _membership_row(spark, words, n, label, udf_suffix):
+    """(false negatives over ``words``, empirical FPR on 50k disjoint
+    probes within the bound) for one ``_membership_kinds`` row."""
+    from prefix_filter_spark.functions import register_contains_udf
+    from prefix_filter_spark.sketches.base import ShardedFilter, build_sharded
+
+    cfg_factory, fpr_bound, prefix = _membership_kinds()[label]
     cfg = cfg_factory(max(n, 1024))
     bound = fpr_bound(cfg) if callable(fpr_bound) else fpr_bound
-    handle = handle_cls.from_df(cfg, build(words, "word", cfg))
-    fn = register_contains_udf(spark, f"{prefix}_contains", handle, cfg.seed)
-    found = words.where(fn("word")).count()
+    handle = ShardedFilter.from_df(cfg, build_sharded(words, "word", cfg))
+    fn = register_contains_udf(spark, f"{prefix}_{udf_suffix}", handle, cfg.seed)
+    found = words.where(fn("word", words)).count()
     probes = spark.range(30_000_000, 30_000_000 + 50_000).select(
         F.concat(F.lit(f"{prefix}_"), F.col("id").cast("string")).alias("word")
     )
-    fp = probes.where(fn("word")).count()
+    fp = probes.where(fn("word", probes)).count()
+    return n - found, bool(fp / 50_000 <= bound)
+
+
+def _membership_panel(spark, sf_dir, label):
+    """One membership gate row. The panel counts the word stream ONCE
+    and sizes the filter from that count (callers used to run the
+    identical distinct+count themselves just to build the config — a
+    doubled input scan, which at 100TB is the dominant cost)."""
+    words = _word_stream(spark, sf_dir).distinct()
+    n = words.count()
     return spark.createDataFrame(
-        [(n, n - found, bool(fp / 50_000 <= bound))],
+        [(n, *_membership_row(spark, words, n, label, "contains"))],
         "n_probed bigint, false_negatives bigint, fpr_ok boolean",
     )
 
@@ -1409,77 +1449,14 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes'; FP probe skipped there — ids, not words — so its bound
     check is trivially true)."""
     from prefix_filter_spark.functions import register_contains_udf
-    from prefix_filter_spark.sketches import blocked_bloom as bb
-    from prefix_filter_spark.sketches import bloom
-    from prefix_filter_spark.sketches import cuckoo as ckm
     from prefix_filter_spark.sketches import prefix_filter as pfm
-    from prefix_filter_spark.sketches import two_choice as tc
-    from prefix_filter_spark.sketches import bfuse as bfm
-    from prefix_filter_spark.sketches import quotient as qfm
-    from prefix_filter_spark.sketches import ribbon as rbm
-    from prefix_filter_spark.sketches import xor as xorm
 
-    pf_cfg = lambda spare: (
-        lambda n: pfm.PrefixFilterConfig(
-            n_capacity=n, num_shards=8, seed=42, spare_kind=spare
-        )
-    )
-    kinds = [
-        ("bloom", bloom.build_bloom, bloom.ShardedBloom,
-         lambda n: bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "zz"),
-        ("blocked_bloom", bb.build_blocked_bloom, bb.ShardedBlockedBloom,
-         lambda n: bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, num_shards=8, seed=42),
-         0.05, "bbf"),
-        ("two_choice", tc.build_two_choice, tc.ShardedTwoChoice,
-         lambda n: tc.TwoChoiceConfig(n_capacity=n, num_shards=8, seed=42),
-         0.02, "tc"),
-        ("cuckoo", ckm.build_cuckoo, ckm.ShardedCuckoo,
-         lambda n: ckm.CuckooConfig(n_capacity=n, num_shards=8, seed=42),
-         0.01, "ck"),
-        ("pf_bloom", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42),
-         0.006, "qq"),
-        ("pf_tc", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("tc"), 0.006, "pftc"),
-        ("pf_cf", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("cuckoo"), 0.006, "pfcf"),
-        ("pf_bbf", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("bbf"), 0.008, "pfbbf"),
-        ("pf_impala", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("impala512"), 0.008, "pfimp"),
-        ("xor", xorm.build_xor, xorm.ShardedXor,
-         lambda n: xorm.XorConfig(n_capacity=n, fingerprint_bits=8, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "xr"),
-        ("pf_xor", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("xor"), 0.006, "pfxr"),
-        ("bfuse", bfm.build_bfuse, bfm.ShardedBFuse,
-         lambda n: bfm.BFuseConfig(n_capacity=n, fingerprint_bits=8, num_shards=4, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "bfu"),
-        ("ribbon", rbm.build_ribbon, rbm.ShardedRibbon,
-         lambda n: rbm.RibbonConfig(n_capacity=n, fingerprint_bits=8, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "rbn"),
-        ("pf_ribbon", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("ribbon"), 0.006, "pfrbn"),
-        ("quotient", qfm.build_quotient, qfm.ShardedQuotient,
-         lambda n: qfm.QuotientFilterConfig(n_capacity=n, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.8 + 1e-4, "qf"),
-    ]
     words = _word_stream(spark, sf_dir).distinct().cache()
     n = words.count()
-    probes = spark.range(30_000_000, 30_000_000 + 50_000)
-    rows = []
-    for kind, build, handle_cls, cfg_factory, fpr_bound, prefix in kinds:
-        cfg = cfg_factory(max(n, 1024))
-        bound = fpr_bound(cfg) if callable(fpr_bound) else fpr_bound
-        handle = handle_cls.from_df(cfg, build(words, "word", cfg))
-        fn = register_contains_udf(spark, f"{prefix}_contains_all", handle, cfg.seed)
-        found = words.where(fn("word")).count()
-        neg = probes.select(
-            F.concat(F.lit(f"{prefix}_"), F.col("id").cast("string")).alias("word")
-        )
-        fp = neg.where(fn("word")).count()
-        rows.append((kind, n, n - found, bool(fp / 50_000 <= bound)))
+    rows = [
+        (label, n, *_membership_row(spark, words, n, label, "contains_all"))
+        for label in _membership_kinds()
+    ]
     # ribbon retrieval (static function word -> 16-bit value): the
     # "false_negatives" column counts VALUE MISMATCHES on member keys —
     # the static-function exactness contract says it must be 0; the FP
@@ -1494,7 +1471,7 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         rcfg, rvm.build_retrieval(pairs, "word", "val", rcfg)
     )
     rfn = register_lookup_udf(spark, "rvmap_lookup_all", rhandle, rcfg.seed)
-    mismatches = pairs.where(rfn("word") != F.col("val")).count()
+    mismatches = pairs.where(rfn("word", pairs) != F.col("val")).count()
     rows.append(("ribbon_map", n, mismatches, True))
     words.unpersist()
     docs = _docs(spark, sf_dir).select("doc_id")
@@ -1504,7 +1481,7 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         cfg, pfm.build_prefix_filter(docs, "doc_id", cfg)
     )
     fn = register_contains_udf(spark, "pf_docid_all", handle, cfg.seed)
-    found = docs.where(fn("doc_id")).count()
+    found = docs.where(fn("doc_id", docs)).count()
     rows.append(("doc_id", nd, nd - found, True))
     return spark.createDataFrame(
         rows,
@@ -1513,46 +1490,22 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_blocked_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import blocked_bloom as bb
-
-    return _membership_panel(
-        spark, sf_dir, bb.build_blocked_bloom, bb.ShardedBlockedBloom,
-        lambda n: bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, num_shards=8, seed=42),
-        0.05, "bbf",
-    )
+    return _membership_panel(spark, sf_dir, "blocked_bloom")
 
 
 def q_two_choice_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import two_choice as tc
-
-    return _membership_panel(
-        spark, sf_dir, tc.build_two_choice, tc.ShardedTwoChoice,
-        lambda n: tc.TwoChoiceConfig(n_capacity=n, num_shards=8, seed=42),
-        0.02, "tc",
-    )
+    return _membership_panel(spark, sf_dir, "two_choice")
 
 
 def q_cuckoo_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch cuckoo filter (reference CuckooFilterStable, 12-bit tags,
     4-way buckets, delete-capable; cuckoofilter_stable.h:69-135)."""
-    from prefix_filter_spark.sketches import cuckoo as ckm
-
-    return _membership_panel(
-        spark, sf_dir, ckm.build_cuckoo, ckm.ShardedCuckoo,
-        lambda n: ckm.CuckooConfig(n_capacity=n, num_shards=8, seed=42),
-        0.01, "ck",
-    )
+    return _membership_panel(spark, sf_dir, "cuckoo")
 
 
 def q_pf_tc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix filter with the two-choice spare (PF[TC], example.cpp:4-5)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="tc"),
-        0.006, "pftc",
-    )
+    return _membership_panel(spark, sf_dir, "pf_tc")
 
 
 def q_pf_cf_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1560,39 +1513,21 @@ def q_pf_cf_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     published assembly, PF[CF12-Flex]
     (/root/reference/main-perf.cpp:16-31, spare sizing
     Tests/wrappers.hpp:529-546)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="cuckoo"),
-        0.006, "pfcf",
-    )
+    return _membership_panel(spark, sf_dir, "pf_cf")
 
 
 def q_pf_bbf_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix filter with the register-blocked spare — the reference's
     PF[BBF-Fixed] assembly (/root/reference/main-fpp.cpp:20, spare
     sizing Tests/wrappers.hpp:564-569)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="bbf"),
-        0.008, "pfbbf",
-    )
+    return _membership_panel(spark, sf_dir, "pf_bbf")
 
 
 def q_pf_impala_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix filter with the 64B-block spare — the reference's
     PF[Impala512] assembly (/root/reference/main-fpp.cpp:23, spare
     sizing Tests/wrappers.hpp:578-593)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="impala512"),
-        0.008, "pfimp",
-    )
+    return _membership_panel(spark, sf_dir, "pf_impala")
 
 
 def q_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1632,7 +1567,7 @@ def q_doc_id_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         cfg, pfm.build_prefix_filter(docs, "doc_id", cfg)
     )
     fn = register_contains_udf(spark, "q_pf_doc", handle, cfg.seed)
-    found = docs.where(fn("doc_id")).count()
+    found = docs.where(fn("doc_id", docs)).count()
     return spark.createDataFrame(
         [(n, n - found)], "n_probed bigint, false_negatives bigint"
     )
@@ -1821,14 +1756,7 @@ def q_pf_join_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = words.count()
     cfg = pfm.PrefixFilterConfig(n_capacity=max(n, 1024), num_shards=8, seed=42)
     shards = pfm.build_prefix_filter(words, "word", cfg)
-    out = probe.probe_via_join(
-        words,
-        "word",
-        shards,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        probe_fn=probe.pf_probe_fn(cfg),
-    )
+    out = probe.probe_via_join(words, "word", shards, cfg)
     return out.agg(
         F.count("*").alias("n_probed"),
         F.sum((~F.col("contains")).cast("bigint")).alias("false_negatives"),

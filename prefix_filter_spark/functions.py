@@ -16,16 +16,14 @@ once per executor, not per task (pyspark_guide.md 'Pitfalls').
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from prefix_filter_spark.plans.sharding import hashed_key_col
-
-
-import functools
-
+from prefix_filter_spark.plans.sharding import hashed_key_col, widen_key_col
 
 # module-level (picklable by reference) cached state deserializers —
 # the SQL quantile UDFs see the same blob on every row of a join
@@ -58,44 +56,34 @@ def _mg_cached(state: bytes):
 
 
 def register_contains_udf(
-    spark: SparkSession, name: str, sketch, seed: int
+    spark: SparkSession, name: str, handle, seed: int
 ) -> "ContainsFunction":
-    """Register ``name(h bigint) -> boolean`` over a probe handle.
-
-    ``sketch`` must expose ``contains_h(np.ndarray[u64]) -> bool array``
-    (ShardedBloom, ShardedPrefixFilter, ...).
-    """
-    predecode = getattr(sketch, "predecode", None)
-    if predecode is not None:
-        predecode()  # pay header decode once, ship decoded tables
-    bc = spark.sparkContext.broadcast(sketch)
-
-    @F.pandas_udf(T.BooleanType())
-    def _contains(h: pd.Series) -> pd.Series:
-        s = bc.value
-        return pd.Series(s.contains_h(h.to_numpy()))
-
-    spark.udf.register(name, _contains)
-    return ContainsFunction(name, _contains, seed, bc)
+    """Register ``name(h bigint) -> boolean`` over a probe handle
+    (``sketches.base.ShardedFilter`` of any membership kind)."""
+    return _register(spark, name, handle, seed, T.BooleanType(), ContainsFunction)
 
 
 def register_lookup_udf(
     spark: SparkSession, name: str, retrieval, seed: int
 ) -> "LookupFunction":
-    """Register ``name(h bigint) -> bigint`` over a ShardedRetrieval
-    handle (sketches/retrieval.py): returns the stored value for every
+    """Register ``name(h bigint) -> bigint`` over a retrieval handle
+    (sketches/retrieval.py): returns the stored value for every
     inserted key, an arbitrary hash-determined value for non-members
     (static-function contract). Same broadcast + Arrow-batch shape as
     register_contains_udf."""
-    bc = spark.sparkContext.broadcast(retrieval)
+    return _register(spark, name, retrieval, seed, T.LongType(), LookupFunction)
 
-    @F.pandas_udf(T.LongType())
-    def _lookup(h: pd.Series) -> pd.Series:
-        s = bc.value
-        return pd.Series(s.lookup_h(h.to_numpy()))
 
-    spark.udf.register(name, _lookup)
-    return LookupFunction(name, _lookup, seed, bc)
+def _register(spark: SparkSession, name: str, handle, seed: int, return_type, fn_cls):
+    handle.predecode()  # pay the per-shard decode once, ship decoded tables
+    bc = spark.sparkContext.broadcast(handle)
+
+    @F.pandas_udf(return_type)
+    def _probe(h: pd.Series) -> pd.Series:
+        return pd.Series(bc.value.contains_h(h.to_numpy()))
+
+    spark.udf.register(name, _probe)
+    return fn_cls(name, _probe, seed, bc)
 
 
 class ContainsFunction:
@@ -108,21 +96,16 @@ class ContainsFunction:
         # pinning every generation on the executors
         self.broadcast = broadcast
 
-    def __call__(self, key: Column | str, df=None) -> Column:
+    def __call__(self, key: Column | str, df: DataFrame) -> Column:
         """contains(raw key column) — composes the JVM-side xxhash64.
 
-        Builds hash integral keys at bigint width (``plans.sharding
-        .widen_key_col``); pass ``df`` (the frame the key column
-        resolves against) so an int/smallint/tinyint probe column is
-        widened the same way — without it a narrow integral column
-        takes the JVM 4-byte hash kernel and every probe is a silent
-        false negative. bigint and string probe columns need no df.
+        ``df`` is the frame the key column resolves against. Builds hash
+        integral keys at bigint width (``plans.sharding.widen_key_col``)
+        and so does this probe: a narrow int/smallint/tinyint column
+        would otherwise take the JVM 4-byte hash kernel, and every probe
+        would be a silent false negative.
         """
-        if df is not None:
-            from prefix_filter_spark.plans.sharding import widen_key_col
-
-            key = widen_key_col(df, key)
-        return self.udf(hashed_key_col(key, self.seed))
+        return self.udf(hashed_key_col(widen_key_col(df, key), self.seed))
 
 
 class LookupFunction(ContainsFunction):
@@ -313,9 +296,8 @@ def register_state_contains(spark: SparkSession, name: str = "bf_state_contains"
 def probe_keys_local(handle, keys) -> "pd.Series":
     """Driver-side membership probe: ZERO Spark jobs.
 
-    ``handle`` is any collected sharded handle exposing ``contains_h``
-    and a ``cfg.seed`` (ShardedBloom / ShardedPrefixFilter /
-    ShardedXor / …); ``keys`` are raw integer or string keys, hashed
+    ``handle`` is a collected ``sketches.base.ShardedFilter`` of any
+    membership kind; ``keys`` are raw integer or string keys, hashed
     with the NumPy/Python twins of the build-side JVM expression
     (``hashing.spark_xxhash64_long`` / ``_str``, JVM-equality
     pytest-pinned). The batch analogue of the reference's single-key

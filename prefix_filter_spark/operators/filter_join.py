@@ -30,50 +30,11 @@ across queries (build once per dim snapshot, probe many facts).
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prefix_filter_spark.functions import register_contains_udf
-
-
-def _default_build(n_keys: int, seed: int):
-    from prefix_filter_spark.sketches import bloom
-
-    cfg = bloom.BloomConfig(
-        n_capacity=max(n_keys, 1024), bits_per_key=12, num_shards=8, seed=seed
-    )
-    return cfg, bloom.build_bloom, bloom.ShardedBloom
-
-
-def _prefix_build(n_keys: int, seed: int):
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    cfg = pfm.PrefixFilterConfig(
-        n_capacity=max(n_keys, 1024), num_shards=8, seed=seed
-    )
-    return cfg, pfm.build_prefix_filter, pfm.ShardedPrefixFilter
-
-
-def _xor_build(n_keys: int, seed: int):
-    # the natural runtime-filter kind when the dim/benchmark key set is
-    # FIXED (decontamination: eval sets never grow): build-once static
-    # filter at 9.84 bits/key @ 2^-8 FPR — denser than Bloom-12 at a
-    # lower false-probe rate, so fewer survivors reach the exact verify
-    from prefix_filter_spark.sketches import xor as xorm
-
-    cfg = xorm.XorConfig(
-        n_capacity=max(n_keys, 1024), fingerprint_bits=8, num_shards=8, seed=seed
-    )
-    return cfg, xorm.build_xor, xorm.ShardedXor
-
-
-_KINDS: dict[str, Callable] = {
-    "bloom": _default_build,
-    "prefix": _prefix_build,
-    "xor": _xor_build,
-}
+from prefix_filter_spark.sketches.base import FILTER_KINDS, ShardedFilter, build_sharded
 
 
 def build_runtime_filter(
@@ -88,14 +49,24 @@ def build_runtime_filter(
     """Build an AMQ filter over ``dim[dim_key]`` and register its
     ``contains`` UDF. Returns the callable column factory.
 
+    ``kind`` is any membership kind of ``sketches.base.FILTER_KINDS``
+    ("bloom", "prefix", "xor", "cuckoo", ...), sized at its config
+    defaults for the dim's distinct key count. "xor" is the natural
+    pick when the dim key set is FIXED (decontamination: eval sets
+    never grow): build-once static filter at 9.84 bits/key @ 2^-8 FPR
+    — denser than Bloom-12 at a lower false-probe rate.
+
     The dim side is counted once (a single-row agg — also the count the
     caller's broadcast-join sizing wants anyway) to size the filter;
     the build is the library's standard one-shuffle sharded build.
     """
+    spec = FILTER_KINDS.get(kind)
+    if spec is None or spec.out_dtype is not bool:
+        raise ValueError(f"{kind!r} is not a membership filter kind")
     keys = dim.select(dim_key).where(F.col(dim_key).isNotNull()).distinct()
     n = keys.count()
-    cfg, build, handle_cls = _KINDS[kind](n, seed)
-    handle = handle_cls.from_df(cfg, build(keys, dim_key, cfg))
+    cfg = spec.config_cls(n_capacity=max(n, 1024), num_shards=8, seed=seed)
+    handle = ShardedFilter.from_df(cfg, build_sharded(keys, dim_key, cfg))
     udf_name = name or f"rf_{kind}_{dim_key}"
     return register_contains_udf(spark, udf_name, handle, cfg.seed)
 
@@ -107,7 +78,7 @@ def prune_fact(fact: DataFrame, fact_key: str, contains) -> DataFrame:
     NULL join keys never match an equi-join, so they are dropped here
     too (same as the exchange would).
     """
-    return fact.where(F.col(fact_key).isNotNull() & contains(F.col(fact_key)))
+    return fact.where(F.col(fact_key).isNotNull() & contains(fact_key, fact))
 
 
 def runtime_filter_join(

@@ -135,11 +135,11 @@ def enrich(
         spark, f"{udf_prefix}_lookup", em.retrieval, em.seed
     )
     em.lookup_fn = rfn
-    value: Column = rfn(fact_key)
+    value: Column = rfn(fact_key, fact)
     if em.guard is not None:
         cfn = register_contains_udf(
             spark, f"{udf_prefix}_guard", em.guard, em.seed
         )
         em.guard_fn = cfn
-        value = F.when(cfn(fact_key), value)
+        value = F.when(cfn(fact_key, fact), value)
     return fact.withColumn(out_col, value)

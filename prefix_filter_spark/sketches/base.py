@@ -21,6 +21,7 @@ from its key batch instead of 25M single-key Add() calls.
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
@@ -28,17 +29,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prefix_filter_spark.hashing import as_u64
+from prefix_filter_spark.hashing import as_u64, shard_of
 from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col, widen_key_col
 
 SHARD_SCHEMA = (
     "sketch string, shard_id int, state binary, "
     "n_keys long, input_rows long, build_ns long"
 )
-
-# state_fn(shard_id, unique_sorted_u64_hashes) -> bytes
-# (with value_col: state_fn(shard_id, raw_u64_hashes, values) -> bytes)
-StateFn = Callable[[int, np.ndarray], bytes]
 
 # proxy table per num_shards: proxies[s] is a long whose Spark Murmur3
 # partition assignment pmod(hash(p), num_shards) equals s — see
@@ -75,27 +72,65 @@ def _shard_proxies(spark, num_shards: int) -> list[int]:
     return _PROXY_CACHE[num_shards]
 
 
-def build_sharded(
-    df: DataFrame,
-    key_col,
-    *,
-    sketch_name: str,
-    seed: int,
-    num_shards: int,
-    state_fn: StateFn,
-    dedupe: bool = True,
-    spread_tasks: bool = False,
-    value_col=None,
-) -> DataFrame:
-    """Hash keys JVM-side, shuffle once by shard, build each shard in one
-    vectorized pandas call.
+@dataclass(frozen=True)
+class FilterKind:
+    """How to build, decode, probe and merge one membership kind's
+    shard states — the reference's FilterAPI<T>
+    (``Tests/wrappers.hpp:50-116``) as one record per kind. Every
+    callable is a MODULE-LEVEL function: probe handles carry their kind
+    through a broadcast, which plain ``pickle`` serializes (functions by
+    reference, so no lambdas or closures).
+
+    - ``state_fn(cfg, shard_id, hashes[, values]) -> bytes``: build one
+      shard from its sorted distinct base hashes (with ``values``:
+      raw hashes and their values, the key-value kinds).
+    - ``decode(cfg, shard_id, state)``: check the state against the
+      config ONCE (a mismatch would be silent false negatives) and
+      return whatever ``probe`` needs — the state bytes, or decoded
+      tables the probe would otherwise rebuild per batch.
+    - ``probe(cfg, decoded, shard_id, h_u64) -> array of out_dtype``.
+    - ``merge(states, cfg, shard_id) -> bytes``: combine same-shard
+      partials; None for the static build-once kinds.
+    - ``spread_tasks``: one build task per shard (see build_sharded).
+    """
+
+    name: str
+    config_cls: type
+    sketch_name: Callable  # (cfg) -> shard-row sketch label
+    state_fn: Callable
+    decode: Callable
+    probe: Callable
+    merge: Callable | None
+    spread_tasks: bool = False
+    out_dtype: type = bool
+
+    def __post_init__(self):
+        FILTER_KINDS[self.name] = self
+
+
+# THE per-kind table: name -> FilterKind. Each kind module registers its
+# spec at import; importing the sketches package imports them all.
+FILTER_KINDS: dict[str, FilterKind] = {}
+
+
+def kind_of(cfg) -> FilterKind:
+    """The FilterKind whose config class ``cfg`` is an instance of."""
+    for kind in FILTER_KINDS.values():
+        if type(cfg) is kind.config_cls:
+            return kind
+    raise TypeError(f"no filter kind takes a {type(cfg).__name__}")
+
+
+def build_sharded(df: DataFrame, key_col, cfg, value_col=None) -> DataFrame:
+    """Hash keys JVM-side, shuffle once by shard, build each shard of
+    ``cfg``'s kind in one vectorized pandas call.
 
     The only shuffle is the groupBy(shard_id); routing, hashing and
     column pruning all stay in Catalyst. Keys are deduped *inside* the
     shard build (same key always routes to the same shard), avoiding a
     second shuffle for distinct().
 
-    ``spread_tasks=True`` places each shard in ITS OWN shuffle
+    A kind with ``spread_tasks`` gets each shard in ITS OWN shuffle
     partition (and task). The NumPy builds leave it off — AQE's
     coalescing is the right call when the per-shard work is a
     microsecond-scale vector pass over a few hundred KB. The ribbon /
@@ -110,18 +145,19 @@ def build_sharded(
     the true shard id is recomputed from the hashes inside the build.
 
     ``value_col`` (optional): ship a long value column through Arrow
-    next to the hash; ``state_fn`` then receives (shard_id, raw_hashes,
-    values) — unsorted, NOT deduped (kv state_fns own duplicate
-    semantics, e.g. the retrieval structure's conflict check). NULL
-    values raise (pandas would silently turn them into float NaN →
-    INT64_MIN garbage).
+    next to the hash; the kind's ``state_fn`` then receives (cfg,
+    shard_id, raw_hashes, values) — unsorted, NOT deduped (kv state_fns
+    own duplicate semantics, e.g. the retrieval structure's conflict
+    check). NULL values raise (pandas would silently turn them into
+    float NaN → INT64_MIN garbage).
     """
-    from prefix_filter_spark.hashing import shard_of
-
+    kind = kind_of(cfg)
+    sketch_name = kind.sketch_name(cfg)
+    num_shards = cfg.num_shards
     # integral keys hash at bigint width on every path (widen_key_col) —
     # a narrow int column would otherwise take the JVM 4-byte kernel and
     # break the driver-side probe twins' zero-FN contract
-    h = hashed_key_col(widen_key_col(df, key_col), seed)
+    h = hashed_key_col(widen_key_col(df, key_col), cfg.seed)
     # group by the shard EXPRESSION: the grouping key is evaluated
     # JVM-side but not shipped through Arrow — the Python worker sees
     # only the 8-byte hash column (33% less pipe volume) and recomputes
@@ -132,7 +168,7 @@ def build_sharded(
     else:
         keyed = df.select(h.alias("h"))
     group_key = shard_col(F.col("h"), num_shards).alias("shard_id")
-    if spread_tasks:
+    if kind.spread_tasks:
         proxies = _shard_proxies(df.sparkSession, num_shards)
         proxy = F.element_at(
             F.array(*[F.lit(p).cast("long") for p in proxies]),
@@ -154,14 +190,11 @@ def build_sharded(
                     "upstream"
                 )
             values = pdf["v"].to_numpy().astype(np.int64)
-            state = state_fn(shard_id, hashes, values)
+            state = kind.state_fn(cfg, shard_id, hashes, values)
             n_keys = len(np.unique(hashes))
         else:
-            if dedupe:
-                hashes = np.unique(hashes)  # sorted + distinct
-            else:
-                hashes = np.sort(hashes)
-            state = state_fn(shard_id, hashes)
+            hashes = np.unique(hashes)  # sorted + distinct
+            state = kind.state_fn(cfg, shard_id, hashes)
             n_keys = len(hashes)
         return pd.DataFrame(
             {
@@ -175,6 +208,66 @@ def build_sharded(
         )
 
     return keyed.groupBy(group_key).applyInPandas(build_group, schema=SHARD_SCHEMA)
+
+
+class ShardedFilter:
+    """Driver-side probe handle over collected shard states, for every
+    FilterKind (the kind follows from the config's class).
+
+    ``contains_h`` takes the xxhash64 column values (int64) — the same
+    base hash used at build time — routes them to their shards and
+    probes each shard's batch with the kind's vectorized ``probe``; it
+    is what the registered SQL UDF calls (see functions.py). Each
+    shard is decoded (and checked against the config) once, on first
+    use or by ``predecode``. ``lookup_h`` is the same loop, named for
+    the key-value kinds, whose ``out_dtype`` is int64.
+    """
+
+    def __init__(self, cfg, states: dict[int, bytes]):
+        self.cfg = cfg
+        self.states = states
+        self.kind = kind_of(cfg)
+        self._decoded: dict[int, object] = {}
+
+    @classmethod
+    def from_df(cls, cfg, shards_df: DataFrame) -> "ShardedFilter":
+        return cls(cfg, collect_states(shards_df))
+
+    def byte_size(self) -> int:
+        # FilterAPI::get_byte_size (reference Tests/wrappers.hpp:766-772)
+        return sum(len(s) for s in self.states.values())
+
+    def decoded(self, sid: int):
+        dec = self._decoded.get(sid)
+        if dec is None:
+            dec = self.kind.decode(self.cfg, sid, self.states[sid])
+            self._decoded[sid] = dec
+        return dec
+
+    def predecode(self) -> "ShardedFilter":
+        """Decode every shard once (driver-side, before broadcast) so
+        executors probe immediately — the batch analogue of the
+        reference amortizing select64 across a probe loop."""
+        for sid in self.states:
+            self.decoded(sid)
+        return self
+
+    def contains_h(self, h) -> np.ndarray:
+        h = as_u64(np.asarray(h))
+        out = np.zeros(len(h), dtype=self.kind.out_dtype)
+        if len(h) == 0:
+            return out
+        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
+        order = np.argsort(shards, kind="stable")
+        bounds = np.searchsorted(shards[order], np.arange(self.cfg.num_shards + 1))
+        for sid in np.flatnonzero(np.diff(bounds)):
+            sid = int(sid)
+            if sid in self.states:
+                idx = order[bounds[sid] : bounds[sid + 1]]
+                out[idx] = self.kind.probe(self.cfg, self.decoded(sid), sid, h[idx])
+        return out
+
+    lookup_h = contains_h
 
 
 def merge_shard_states(df: DataFrame, merge_fn) -> DataFrame:

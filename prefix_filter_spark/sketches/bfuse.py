@@ -36,9 +36,8 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.xor import _peel
 
@@ -184,45 +183,31 @@ def merge_states(states: list[bytes]) -> bytes:
     )
 
 
-def build_bfuse(df: DataFrame, key_col, cfg: BFuseConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"bfuse{cfg.fingerprint_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
+def _sketch_name(cfg: BFuseConfig) -> str:
+    return f"bfuse{cfg.fingerprint_bits}"
 
 
-class ShardedBFuse:
-    """Probe handle; protocol-identical to ShardedXor/ShardedBloom."""
+def _state(cfg: BFuseConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
+    return _build_state(cfg, hashes_u64)
 
-    def __init__(self, cfg: BFuseConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
 
-    @classmethod
-    def from_df(cls, cfg: BFuseConfig, shards_df: DataFrame) -> "ShardedBFuse":
-        return cls(cfg, base.collect_states(shards_df))
+def _decode(cfg: BFuseConfig, shard_id: int, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _contains_in_state(state, h[idx])
-        return out
+def _probe(cfg: BFuseConfig, state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
+    return _contains_in_state(state, h)
+
+
+KIND = base.FilterKind(
+    name="bfuse",
+    config_cls=BFuseConfig,
+    sketch_name=_sketch_name,
+    state_fn=_state,
+    decode=_decode,
+    probe=_probe,
+    merge=None,  # static: merge_states raises
+)
+build_bfuse = base.build_sharded
+ShardedBFuse = base.ShardedFilter

@@ -28,9 +28,8 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFBB"
@@ -185,42 +184,35 @@ def merge_states(states: list[bytes]) -> bytes:
     return hdr + merged.tobytes()
 
 
-def build_blocked_bloom(df: DataFrame, key_col, cfg: BlockedBloomConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"bbf{cfg.block_bytes * 8}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
+def _sketch_name(cfg: BlockedBloomConfig) -> str:
+    return f"bbf{cfg.block_bytes * 8}"
 
 
-class ShardedBlockedBloom:
-    def __init__(self, cfg: BlockedBloomConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
+def _state(cfg: BlockedBloomConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
+    return _build_state(cfg, hashes_u64)
 
-    @classmethod
-    def from_df(cls, cfg, shards_df) -> "ShardedBlockedBloom":
-        return cls(cfg, base.collect_states(shards_df))
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
+def _decode(cfg: BlockedBloomConfig, shard_id: int, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        g = mix_with_seed(h, self.cfg.seed + 0xBB0C)
-        order = np.argsort(shards, kind="stable")
-        ss = shards[order]
-        bounds = np.searchsorted(ss, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(ss):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            st = self.states.get(int(sid))
-            if st is not None:
-                out[idx] = _contains_in_state(self.cfg, st, g[idx])
-        return out
+
+def _probe(cfg: BlockedBloomConfig, state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
+    return _contains_in_state(cfg, state, mix_with_seed(h, cfg.seed + 0xBB0C))
+
+
+def _merge(states: list[bytes], cfg: BlockedBloomConfig, shard_id: int) -> bytes:
+    return merge_states(states)
+
+
+KIND = base.FilterKind(
+    name="bbf",
+    config_cls=BlockedBloomConfig,
+    sketch_name=_sketch_name,
+    state_fn=_state,
+    decode=_decode,
+    probe=_probe,
+    merge=_merge,
+)
+build_blocked_bloom = base.build_sharded
+ShardedBlockedBloom = base.ShardedFilter

@@ -25,9 +25,8 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFSB"
@@ -147,58 +146,6 @@ def merge_states(states: list[bytes]) -> bytes:
     return hdr + merged.tobytes()
 
 
-def build_bloom(df: DataFrame, key_col, cfg: BloomConfig) -> DataFrame:
-    """df[key_col] -> shard-row DataFrame (one shuffle, vectorized build)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"bloom{cfg.bits_per_key}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
-
-
-class ShardedBloom:
-    """Driver-side probe handle over collected shard states.
-
-    ``contains_h`` takes the xxhash64 column values (int64) — the same
-    base hash used at build time — and is fully vectorized; it is what
-    the registered SQL UDF calls (see functions.py).
-    """
-
-    def __init__(self, cfg: BloomConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
-
-    @classmethod
-    def from_df(cls, cfg: BloomConfig, shards_df: DataFrame) -> "ShardedBloom":
-        return cls(cfg, base.collect_states(shards_df))
-
-    def byte_size(self) -> int:
-        # FilterAPI::get_byte_size (/root/reference/Tests/wrappers.hpp:766-772)
-        return sum(len(s) for s in self.states.values())
-
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        g = mix_with_seed(h, self.cfg.seed + 0x5EED)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _contains_in_state(state, g[idx])
-        return out
-
-
 def contains_h_in_state(state: bytes, h) -> np.ndarray:
     """Probe base-hash values against ONE serialized state, reading the
     seed from the state header — the state-COLUMN path (SQL UDF over a
@@ -207,3 +154,37 @@ def contains_h_in_state(state: bytes, h) -> np.ndarray:
     _magic, _ver, _k, _, _m, seed, _ns = _HDR.unpack_from(state, 0)
     g = mix_with_seed(as_u64(np.asarray(h)), seed + 0x5EED)
     return _contains_in_state(state, g)
+
+
+def _sketch_name(cfg: BloomConfig) -> str:
+    return f"bloom{cfg.bits_per_key}"
+
+
+def _state(cfg: BloomConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
+    return _build_state(cfg, hashes_u64)
+
+
+def _decode(cfg: BloomConfig, shard_id: int, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
+
+
+def _probe(cfg: BloomConfig, state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
+    return _contains_in_state(state, mix_with_seed(h, cfg.seed + 0x5EED))
+
+
+def _merge(states: list[bytes], cfg: BloomConfig, shard_id: int) -> bytes:
+    return merge_states(states)
+
+
+KIND = base.FilterKind(
+    name="bloom",
+    config_cls=BloomConfig,
+    sketch_name=_sketch_name,
+    state_fn=_state,
+    decode=_decode,
+    probe=_probe,
+    merge=_merge,
+)
+build_bloom = base.build_sharded
+ShardedBloom = base.ShardedFilter

@@ -41,7 +41,6 @@ from prefix_filter_spark.hashing import (
     fastrange32,
     fixed_reduce,
     mix_with_seed,
-    shard_of,
 )
 from prefix_filter_spark.sketches import base, bloom, pd_kernel
 
@@ -163,93 +162,22 @@ class PrefixFilterConfig:
         )
 
 
-def _spare_ops(kind: str):
-    """THE spare dispatch registry: kind -> (build, merge-or-None,
-    probe). Every spare kind registers here exactly once — the previous
-    per-function if-chains had four sites to keep in lockstep, and a
-    kind missing from one silently fell through to the bloom default
-    (silent false negatives at probe time). merge is None for the
-    static build-once kinds (xor / ribbon)."""
-    if kind == "bloom":
-        return (
-            lambda cfg, keys: bloom._build_state(cfg.spare_bloom_config(), keys),
-            lambda cfg, states: bloom.merge_states(states),
-            lambda cfg, state, keys: bloom._contains_in_state(
-                state, mix_with_seed(keys, cfg.spare_bloom_config().seed + 0x5EED)
-            ),
-        )
-    if kind == "tc":
-        from prefix_filter_spark.sketches import two_choice as tc
-
-        return (
-            lambda cfg, keys: tc._build_state(cfg.spare_tc_config(), keys),
-            lambda cfg, states: tc.merge_states(states, cfg.spare_tc_config()),
-            lambda cfg, state, keys: tc._contains_in_state(
-                cfg.spare_tc_config(), state, keys
-            ),
-        )
-    if kind == "cuckoo":
-        from prefix_filter_spark.sketches import cuckoo as ck
-
-        return (
-            lambda cfg, keys: ck._build_state(cfg.spare_cuckoo_config(), keys),
-            lambda cfg, states: ck.merge_states(states, cfg.spare_cuckoo_config()),
-            lambda cfg, state, keys: ck._contains_in_state(
-                cfg.spare_cuckoo_config(), state, keys
-            ),
-        )
-    if kind in ("bbf", "impala512"):
-        from prefix_filter_spark.sketches import blocked_bloom as bb
-
-        def _bb_probe(cfg, state, keys):
-            bcfg = cfg.spare_bbf_config()
-            return bb._contains_in_state(
-                bcfg, state, mix_with_seed(keys, bcfg.seed + 0xBB0C)
-            )
-
-        return (
-            lambda cfg, keys: bb._build_state(cfg.spare_bbf_config(), keys),
-            lambda cfg, states: bb.merge_states(states),
-            _bb_probe,
-        )
-    if kind == "xor":
-        from prefix_filter_spark.sketches import xor as xorm
-
-        return (
-            lambda cfg, keys: xorm._build_state(cfg.spare_xor_config(), np.sort(keys)),
-            None,
-            lambda cfg, state, keys: xorm._contains_in_state(state, keys),
-        )
-    if kind == "ribbon":
-        from prefix_filter_spark.sketches import ribbon as rbm
-
-        return (
-            lambda cfg, keys: rbm._build_state(cfg.spare_ribbon_config(), np.sort(keys)),
-            None,
-            lambda cfg, state, keys: rbm._contains_in_state(state, keys),
-        )
-    raise ValueError(
-        f"unknown spare_kind {kind!r} — one of {sorted(_SPARE_KIND_CODE)}"
-    )
-
-
-def _spare_build(cfg: PrefixFilterConfig, keys_u64: np.ndarray) -> bytes:
-    return _spare_ops(cfg.spare_kind)[0](cfg, keys_u64)
-
-
-def _spare_merge(cfg: PrefixFilterConfig, states: list[bytes]) -> bytes:
-    merge = _spare_ops(cfg.spare_kind)[1]
-    if merge is None:
+def _spare(cfg: PrefixFilterConfig):
+    """The spare's FilterKind and config: a kind plugs in as a spare with
+    a ``spare_<kind>_config`` here and a code in _SPARE_KIND_CODE
+    (impala512 is the bbf kind with 64-byte blocks)."""
+    if cfg.spare_kind not in _SPARE_KIND_CODE:
         raise ValueError(
-            f"PF[{cfg.spare_kind}] is a build-once assembly: the static "
-            "spare cannot merge partial states — rebuild from the full key "
-            "stream, or pick a mergeable spare kind for incremental use"
+            f"unknown spare_kind {cfg.spare_kind!r} — one of {sorted(_SPARE_KIND_CODE)}"
         )
-    return merge(cfg, states)
+    name = "bbf" if cfg.spare_kind == "impala512" else cfg.spare_kind
+    return base.FILTER_KINDS[name], getattr(cfg, f"spare_{name}_config")()
 
 
-def _spare_probe(cfg: PrefixFilterConfig, spare_state: bytes, keys_u64: np.ndarray) -> np.ndarray:
-    return _spare_ops(cfg.spare_kind)[2](cfg, spare_state, keys_u64)
+def _spare_build(cfg: PrefixFilterConfig, shard_id: int, ev_pd, ev_qr) -> bytes:
+    kind, spare_cfg = _spare(cfg)
+    keys = np.unique(_spare_keys(shard_id, cfg, ev_pd, ev_qr))
+    return kind.state_fn(spare_cfg, 0, keys)
 
 
 def _derive_pd_qr(hashes_u64: np.ndarray, cfg: PrefixFilterConfig):
@@ -276,9 +204,7 @@ def _build_state(cfg: PrefixFilterConfig, shard_id: int, hashes_u64: np.ndarray)
     pd_idx, qr = _derive_pd_qr(hashes_u64, cfg)
     num_pd = cfg.num_pd_per_shard
     headers, body, ev_pd, ev_qr, _n_l1 = pd_kernel.build_pds(pd_idx, qr, num_pd)
-    spare_state = _spare_build(
-        cfg, np.unique(_spare_keys(shard_id, cfg, ev_pd, ev_qr))
-    )
+    spare_state = _spare_build(cfg, shard_id, ev_pd, ev_qr)
     return (
         _pack_header(cfg, num_pd, len(spare_state))
         + headers.tobytes()
@@ -394,26 +320,20 @@ def merge_states(states: list[bytes], cfg: PrefixFilterConfig, shard_id: int) ->
             axis=1,
         )
         headers = pd_kernel.encode_headers(counts_q, overflowed | need_fix, lq)
-    ev_state = _spare_build(
-        cfg, np.unique(_spare_keys(shard_id, cfg, ev_pd, ev_qr))
-    )
-    spare = _spare_merge(cfg, spares + [ev_state])
+    ev_state = _spare_build(cfg, shard_id, ev_pd, ev_qr)
+    kind, spare_cfg = _spare(cfg)
+    if kind.merge is None:
+        raise ValueError(
+            f"PF[{cfg.spare_kind}] is a build-once assembly: the static "
+            "spare cannot merge partial states — rebuild from the full key "
+            "stream, or pick a mergeable spare kind for incremental use"
+        )
+    spare = kind.merge(spares + [ev_state], spare_cfg, 0)
     return (
         _pack_header(cfg, num_pd, len(spare))
         + headers.tobytes()
         + body.tobytes()
         + spare
-    )
-
-
-def build_prefix_filter(df: DataFrame, key_col, cfg: PrefixFilterConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name="prefix_filter",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, shard_id, hashes),
     )
 
 
@@ -457,71 +377,51 @@ def shard_diagnostics(cfg: PrefixFilterConfig, shards_df: DataFrame) -> DataFram
     )
 
 
-class ShardedPrefixFilter:
-    """Probe handle; decodes each shard's headers once and probes whole
-    Arrow batches as matrix ops (amortized select64, SURVEY.md §4)."""
+def _sketch_name(cfg: PrefixFilterConfig) -> str:
+    return "prefix_filter"
 
-    def __init__(self, cfg: PrefixFilterConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
-        self._decoded: dict[int, tuple] = {}
 
-    @classmethod
-    def from_df(cls, cfg: PrefixFilterConfig, shards_df: DataFrame) -> "ShardedPrefixFilter":
-        return cls(cfg, base.collect_states(shards_df))
+def _decode(cfg: PrefixFilterConfig, shard_id: int, state: bytes):
+    """Decode a shard's PD headers once; the tables ride the broadcast
+    after predecode(), so keep them in compact dtypes (~1 byte/slot)."""
+    check_state(cfg, state)
+    headers, body, spare = _parse_state(state)
+    counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
+    max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
+    kind, spare_cfg = _spare(cfg)
+    return (
+        counts_incl.astype(np.uint8),
+        overflowed,
+        max_qr.astype(np.int16),
+        body,
+        kind.decode(spare_cfg, 0, spare),
+    )
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def _shard(self, sid: int):
-        dec = self._decoded.get(sid)
-        if dec is None:
-            check_state(self.cfg, self.states[sid])
-            headers, body, spare = _parse_state(self.states[sid])
-            counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
-            max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
-            # compact dtypes: decoded tables ride the broadcast after
-            # predecode(), so keep them ~1 byte/slot
-            dec = (
-                counts_incl.astype(np.uint8),
-                overflowed,
-                max_qr.astype(np.int16),
-                body,
-                spare,
-            )
-            self._decoded[sid] = dec
-        return dec
+def _probe(cfg: PrefixFilterConfig, decoded, shard_id: int, h: np.ndarray) -> np.ndarray:
+    """Whole-batch probe as matrix ops (amortized select64, SURVEY.md §4):
+    L1 answers, and keys whose PD overflowed go on to the spare."""
+    counts_incl, overflowed, max_qr, body, spare = decoded
+    pd_idx, qr = _derive_pd_qr(h, cfg)
+    res, route_spare = pd_kernel.probe_pds(
+        counts_incl, overflowed, max_qr, body, pd_idx, qr
+    )
+    if route_spare.any():
+        kind, spare_cfg = _spare(cfg)
+        sk = _spare_keys(shard_id, cfg, pd_idx[route_spare], qr[route_spare])
+        res = res.copy()
+        res[route_spare] = kind.probe(spare_cfg, spare, 0, sk)
+    return res
 
-    def predecode(self) -> "ShardedPrefixFilter":
-        """Decode every shard's headers once (driver-side, before
-        broadcast) so executors probe immediately — the batch analogue
-        of the reference amortizing select64 across a probe loop."""
-        for sid in self.states:
-            self._shard(sid)
-        return self
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            if int(sid) not in self.states:
-                continue
-            counts_incl, overflowed, max_qr, body, spare = self._shard(int(sid))
-            pd_idx, qr = _derive_pd_qr(h[idx], self.cfg)
-            l1_hit, route_spare = pd_kernel.probe_pds(
-                counts_incl, overflowed, max_qr, body, pd_idx, qr
-            )
-            res = l1_hit
-            if route_spare.any():
-                sk = _spare_keys(int(sid), self.cfg, pd_idx[route_spare], qr[route_spare])
-                res = res.copy()
-                res[route_spare] = _spare_probe(self.cfg, spare, sk)
-            out[idx] = res
-        return out
+KIND = base.FilterKind(
+    name="prefix",
+    config_cls=PrefixFilterConfig,
+    sketch_name=_sketch_name,
+    state_fn=_build_state,
+    decode=_decode,
+    probe=_probe,
+    merge=merge_states,
+)
+build_prefix_filter = base.build_sharded
+ShardedPrefixFilter = base.ShardedFilter

@@ -17,27 +17,21 @@ Both paths produce identical answers (pytest-verified).
 
 from __future__ import annotations
 
-from typing import Callable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import as_u64
 from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col, widen_key_col
-
-# probe_fn(state_bytes, shard_id, h_u64_array) -> bool array
-ProbeFn = Callable[[bytes, int, np.ndarray], np.ndarray]
+from prefix_filter_spark.sketches import base
 
 
 def probe_via_join(
     probes: DataFrame,
     key_col,
     shards_df: DataFrame,
+    cfg,
     *,
-    seed: int,
-    num_shards: int,
-    probe_fn: ProbeFn,
     id_cols: list[str] | None = None,
 ) -> DataFrame:
     """-> (<id_cols...>, h bigint, contains boolean).
@@ -45,12 +39,14 @@ def probe_via_join(
     One shuffle of the probe stream (hash-partitioned by shard, same
     routing as the build), plus a co-grouped join against the single
     state row per shard via cogroup (state never replicated per probe
-    row).
+    row). Each group decodes its shard once and probes with ``cfg``'s
+    FilterKind — the same decode/probe the broadcast handle runs.
     """
+    kind = base.kind_of(cfg)
     id_cols = id_cols or []
-    h = hashed_key_col(widen_key_col(probes, key_col), seed)
+    h = hashed_key_col(widen_key_col(probes, key_col), cfg.seed)
     keyed = probes.select(
-        *id_cols, h.alias("h"), shard_col(h, num_shards).alias("shard_id")
+        *id_cols, h.alias("h"), shard_col(h, cfg.num_shards).alias("shard_id")
     )
     state_side = shards_df.select("shard_id", "state")
 
@@ -65,8 +61,8 @@ def probe_via_join(
         res = np.zeros(len(left), dtype=bool)
         if len(right):
             sid = int(left["shard_id"].iloc[0])
-            state = bytes(right["state"].iloc[0])
-            res = probe_fn(state, sid, as_u64(left["h"].to_numpy()))
+            decoded = kind.decode(cfg, sid, bytes(right["state"].iloc[0]))
+            res = kind.probe(cfg, decoded, sid, as_u64(left["h"].to_numpy()))
         out = left[[*id_cols, "h"]].copy()
         out["contains"] = res
         return out
@@ -81,48 +77,3 @@ def probe_via_join(
 def _types_of(df: DataFrame, cols: list[str]) -> list[str]:
     m = dict(df.dtypes)
     return [m[c] for c in cols]
-
-
-def pf_probe_fn(cfg) -> ProbeFn:
-    """Prefix-filter probe kernel for probe_via_join."""
-    from prefix_filter_spark.sketches import pd_kernel
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        pfm.check_state(cfg, state)
-        headers, body, spare = pfm._parse_state(state)
-        counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
-        max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
-        pd_idx, qr = pfm._derive_pd_qr(h, cfg)
-        l1_hit, route_spare = pd_kernel.probe_pds(
-            counts_incl, overflowed, max_qr, body, pd_idx, qr
-        )
-        res = l1_hit
-        if route_spare.any():
-            sk = pfm._spare_keys(shard_id, cfg, pd_idx[route_spare], qr[route_spare])
-            res = res.copy()
-            res[route_spare] = pfm._spare_probe(cfg, spare, sk)
-        return res
-
-    return fn
-
-
-def bloom_probe_fn(cfg) -> ProbeFn:
-    from prefix_filter_spark.hashing import mix_with_seed
-    from prefix_filter_spark.sketches import bloom
-
-    def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        bloom.check_state(cfg, state)
-        g = mix_with_seed(h, cfg.seed + 0x5EED)
-        return bloom._contains_in_state(state, g)
-
-    return fn
-
-
-def cuckoo_probe_fn(cfg) -> ProbeFn:
-    from prefix_filter_spark.sketches import cuckoo
-
-    def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        return cuckoo._contains_in_state(cfg, state, h)
-
-    return fn

@@ -41,7 +41,6 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, shard_of
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.ribbon import _MAX_ATTEMPTS, _W, _derive, _m_for, _solve
 
@@ -179,49 +178,38 @@ def build_retrieval(
     The shared one-shuffle build with the value column riding next to
     the 8-byte hash through Arrow; spread_tasks puts each sequential
     banded solve in its own task (see base.build_sharded)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"ribbon_retrieval{cfg.value_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda sid, hashes, values: _build_state(cfg, hashes, values),
-        spread_tasks=True,
-        value_col=value_col,
-    )
+    return base.build_sharded(df, key_col, cfg, value_col=value_col)
 
 
-class ShardedRetrieval:
-    """Driver-side lookup handle; same shard-routing shape as the probe
-    handles, but returns the stored value (int64) instead of a boolean.
-    Keys never inserted return arbitrary values (static-function
-    contract) — gate with an AMQ filter when membership is unknown."""
+def _sketch_name(cfg: RetrievalConfig) -> str:
+    return f"ribbon_retrieval{cfg.value_bits}"
 
-    def __init__(self, cfg: RetrievalConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
 
-    @classmethod
-    def from_df(cls, cfg: RetrievalConfig, shards_df: DataFrame) -> "ShardedRetrieval":
-        return cls(cfg, base.collect_states(shards_df))
+def _state(cfg: RetrievalConfig, shard_id: int, hashes_u64: np.ndarray, values: np.ndarray) -> bytes:
+    return _build_state(cfg, hashes_u64, values)
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def lookup_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=np.int64)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _lookup_in_state(state, h[idx])
-        return out
+def _decode(cfg: RetrievalConfig, shard_id: int, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
+
+
+def _probe(cfg: RetrievalConfig, state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
+    return _lookup_in_state(state, h)
+
+
+# lookup_h returns the stored value (int64) for inserted keys; keys never
+# inserted return arbitrary values (static-function contract) — gate
+# with an AMQ filter when membership is unknown
+KIND = base.FilterKind(
+    name="retrieval",
+    config_cls=RetrievalConfig,
+    sketch_name=_sketch_name,
+    state_fn=_state,
+    decode=_decode,
+    probe=_probe,
+    merge=None,  # static: merge_states raises
+    spread_tasks=True,
+    out_dtype=np.int64,
+)
+ShardedRetrieval = base.ShardedFilter

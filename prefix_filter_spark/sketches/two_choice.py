@@ -41,7 +41,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFTC"
@@ -306,41 +306,35 @@ def remove_keys(df: DataFrame, key_col, cfg: TwoChoiceConfig, shards_df: DataFra
     )
 
 
-def build_two_choice(df: DataFrame, key_col, cfg: TwoChoiceConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"tc{cfg.fp_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
+def _sketch_name(cfg: TwoChoiceConfig) -> str:
+    return f"tc{cfg.fp_bits}"
 
 
-class ShardedTwoChoice:
-    def __init__(self, cfg: TwoChoiceConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
+def _state(cfg: TwoChoiceConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
+    return _build_state(cfg, hashes_u64)
 
-    @classmethod
-    def from_df(cls, cfg, shards_df) -> "ShardedTwoChoice":
-        return cls(cfg, base.collect_states(shards_df))
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
+def _decode(cfg: TwoChoiceConfig, shard_id: int, state: bytes) -> bytes:
+    _check_geometry(cfg, state)
+    return state
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        ss = shards[order]
-        bounds = np.searchsorted(ss, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(ss):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            st = self.states.get(int(sid))
-            if st is not None:
-                out[idx] = _contains_in_state(self.cfg, st, h[idx])
-        return out
+
+def _probe(cfg: TwoChoiceConfig, state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
+    return _contains_in_state(cfg, state, h)
+
+
+def _merge(states: list[bytes], cfg: TwoChoiceConfig, shard_id: int) -> bytes:
+    return merge_states(states, cfg)
+
+
+KIND = base.FilterKind(
+    name="tc",
+    config_cls=TwoChoiceConfig,
+    sketch_name=_sketch_name,
+    state_fn=_state,
+    decode=_decode,
+    probe=_probe,
+    merge=_merge,
+)
+build_two_choice = base.build_sharded
+ShardedTwoChoice = base.ShardedFilter

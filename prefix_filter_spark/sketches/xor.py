@@ -38,9 +38,8 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFSX"
@@ -238,48 +237,31 @@ def merge_states(states: list[bytes]) -> bytes:
     )
 
 
-def build_xor(df: DataFrame, key_col, cfg: XorConfig) -> DataFrame:
-    """df[key_col] -> shard-row DataFrame (one shuffle, vectorized
-    peel-and-assign per shard)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"xor{cfg.fingerprint_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
+def _sketch_name(cfg: XorConfig) -> str:
+    return f"xor{cfg.fingerprint_bits}"
 
 
-class ShardedXor:
-    """Driver-side probe handle; protocol-identical to ShardedBloom
-    (functions.register_contains_udf works unchanged)."""
+def _state(cfg: XorConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
+    return _build_state(cfg, hashes_u64)
 
-    def __init__(self, cfg: XorConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
 
-    @classmethod
-    def from_df(cls, cfg: XorConfig, shards_df: DataFrame) -> "ShardedXor":
-        return cls(cfg, base.collect_states(shards_df))
+def _decode(cfg: XorConfig, shard_id: int, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _contains_in_state(state, h[idx])
-        return out
+def _probe(cfg: XorConfig, state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
+    return _contains_in_state(state, h)
+
+
+KIND = base.FilterKind(
+    name="xor",
+    config_cls=XorConfig,
+    sketch_name=_sketch_name,
+    state_fn=_state,
+    decode=_decode,
+    probe=_probe,
+    merge=None,  # static: merge_states raises
+)
+build_xor = base.build_sharded
+ShardedXor = base.ShardedFilter

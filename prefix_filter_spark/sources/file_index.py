@@ -299,14 +299,18 @@ def prune_files(
     probe_hashes: np.ndarray,
     cfg: FileIndexConfig | None = None,
 ) -> list[str]:
-    """File names whose state may contain ANY probe key (sorted)."""
+    """File names whose state may contain ANY probe key (sorted,
+    distinct). An index can hold duplicate rows — a replay of
+    ``iceberg.update_table_index`` after a crash between the states
+    append and the marker write appends a file's rows again — and
+    ``pruned_read`` must still read each file once."""
     hits = (
         probe_file_index(index_df, probe_hashes, cfg)
         .filter(F.col("n_maybe") > 0)
         .select("file")
         .collect()
     )
-    return sorted(r["file"] for r in hits)
+    return sorted({r["file"] for r in hits})
 
 
 def pruned_read(

@@ -93,6 +93,8 @@ import json
 import os
 import time
 
+from prefix_filter_spark.sources.file_index import _decode_file_uri
+
 
 def _manifest_path(table_path: str) -> str:
     return os.path.join(table_path, "metadata", "snapshots.json")
@@ -217,7 +219,7 @@ def read_table(
     reader = spark.read.option("basePath", os.path.join(table_path, "data"))
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+    return reader.parquet(*[_decode_file_uri(f) for f in files])
 
 
 def compact_table(
@@ -325,7 +327,7 @@ def update_table_index(
     if fresh_files:
         fresh = spark.read.option(
             "basePath", os.path.join(table_path, "data")
-        ).parquet(*fresh_files)
+        ).parquet(*[_decode_file_uri(f) for f in fresh_files])
         states = fidx._build_from_tagged(
             fidx._tagged_keys(fresh, key_col, cfg.seed), cfg
         )

@@ -92,7 +92,7 @@ def test_sql_registration(spark, keys_df, built):
     ).collect()[0]["n"]
     assert n == N_KEYS
     # composed-Column form
-    n2 = keys_df.where(fn("key")).count()
+    n2 = keys_df.where(fn("key", keys_df)).count()
     assert n2 == N_KEYS
 
 

@@ -115,7 +115,7 @@ def test_sql_registration(spark, cfg):
     keys = spark.range(N).select(F.col("id").alias("key"))
     handle = ck.ShardedCuckoo.from_df(cfg, ck.build_cuckoo(keys, "key", cfg))
     fn = register_contains_udf(spark, "t_cuckoo", handle, cfg.seed)
-    n = keys.where(fn("key")).count()
+    n = keys.where(fn("key", keys)).count()
     assert n == N
 
 

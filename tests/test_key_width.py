@@ -6,7 +6,8 @@ NumPy twins implement the 8-byte ``hashLong`` path. Before the
 ``widen_key_col`` guard, a filter built over an int32 column answered
 every ``probe_keys_local`` call with a silent false negative. These
 gates pin: build/probe/delete/driver paths all hash integral keys at
-bigint width, whatever the column's storage type.
+bigint width, whatever the column's storage type. The same contract
+over every filter kind and probe path is tests/test_zero_fn_matrix.py.
 """
 
 import numpy as np
@@ -14,10 +15,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from prefix_filter_spark.functions import probe_keys_local, register_contains_udf
+from prefix_filter_spark.functions import probe_keys_local
 from prefix_filter_spark.plans.sharding import widen_key_col
 from prefix_filter_spark.sketches import bloom
-from prefix_filter_spark.sketches.probe import bloom_probe_fn, probe_via_join
 
 N = 4000
 
@@ -53,33 +53,6 @@ def test_int_build_matches_bigint_build_bitwise(spark, cfg):
     sa = {r["shard_id"]: bytes(r["state"]) for r in a.collect()}
     sb = {r["shard_id"]: bytes(r["state"]) for r in b.collect()}
     assert sa == sb
-
-
-def test_join_probe_int_probe_column(spark, cfg):
-    """probe_via_join widens the PROBE side too: int probe keys against
-    a bigint-hashed build find every member."""
-    shards = bloom.build_bloom(_int_df(spark, "bigint"), "k", cfg)
-    probes = _int_df(spark, "int", 300)
-    out = probe_via_join(
-        probes,
-        "k",
-        shards,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        probe_fn=bloom_probe_fn(cfg),
-    )
-    assert out.filter(~F.col("contains")).count() == 0
-
-
-def test_sql_probe_with_df_widening(spark, cfg):
-    """ContainsFunction(key, df=...) widens an int probe column for the
-    broadcast SQL path."""
-    handle = bloom.ShardedBloom.from_df(
-        cfg, bloom.build_bloom(_int_df(spark, "bigint"), "k", cfg)
-    )
-    fn = register_contains_udf(spark, "kw_bf", handle, cfg.seed)
-    probes = _int_df(spark, "int", 300)
-    assert probes.filter(fn("k", df=probes)).count() == 300
 
 
 def test_widen_key_col_passthrough(spark):

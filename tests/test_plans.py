@@ -58,7 +58,7 @@ def test_probe_plan_is_scan_plus_scalar_udf(spark):
     cfg = bloom.BloomConfig(n_capacity=10_000, num_shards=8, seed=1)
     handle = bloom.ShardedBloom.from_df(cfg, bloom.build_bloom(keys, "key", cfg))
     fn = register_contains_udf(spark, "plan_bf", handle, cfg.seed)
-    plan = _plan(keys.where(fn("key")))
+    plan = _plan(keys.where(fn("key", keys)))
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
 

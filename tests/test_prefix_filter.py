@@ -96,7 +96,7 @@ def test_sql_and_yes_workload(spark, keys_df, cfg, built):
     fn = register_contains_udf(spark, "pf_contains_h", built, cfg.seed)
     yes = keys_df.sample(withReplacement=True, fraction=0.3, seed=7)
     n = yes.count()
-    assert yes.where(fn("key")).count() == n
+    assert yes.where(fn("key", yes)).count() == n
 
 
 def test_tc_spare_variant(spark, keys_df):

@@ -18,13 +18,7 @@ def test_pf_join_probe_equals_broadcast(spark):
         F.col("id").alias("probe_id"), F.col("id").alias("key")
     )
     joined = probe.probe_via_join(
-        probes,
-        "key",
-        shards,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        probe_fn=probe.pf_probe_fn(cfg),
-        id_cols=["probe_id"],
+        probes, "key", shards, cfg, id_cols=["probe_id"]
     ).toPandas()
     assert len(joined) == 200_000
     import numpy as np
@@ -41,32 +35,9 @@ def test_bloom_join_probe(spark):
     cfg = bloom.BloomConfig(n_capacity=30_000, bits_per_key=10, num_shards=8, seed=32)
     keys = spark.range(30_000).select(F.col("id").alias("key"))
     shards = bloom.build_bloom(keys, "key", cfg)
-    out = probe.probe_via_join(
-        keys,
-        "key",
-        shards,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        probe_fn=probe.bloom_probe_fn(cfg),
-    )
+    out = probe.probe_via_join(keys, "key", shards, cfg)
     assert out.where("contains").count() == 30_000
     # the probe plan shuffles probes once and never replicates state rows
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
 
-
-def test_cuckoo_join_probe(spark):
-    from prefix_filter_spark.sketches import cuckoo as ck
-
-    cfg = ck.CuckooConfig(n_capacity=30_000, num_shards=8, seed=33)
-    keys = spark.range(30_000).select(F.col("id").alias("key"))
-    shards = ck.build_cuckoo(keys, "key", cfg)
-    out = probe.probe_via_join(
-        keys,
-        "key",
-        shards,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        probe_fn=probe.cuckoo_probe_fn(cfg),
-    )
-    assert out.where("contains").count() == 30_000

@@ -31,7 +31,7 @@ def built(spark, keys_df):
 def test_zero_false_negatives(spark, keys_df, built):
     cfg, handle = built
     fn = register_contains_udf(spark, "qf_all", handle, cfg.seed)
-    assert keys_df.where(fn("key")).count() == N_KEYS
+    assert keys_df.where(fn("key", keys_df)).count() == N_KEYS
 
 
 def test_fpr_within_bound(spark, built):
@@ -40,7 +40,7 @@ def test_fpr_within_bound(spark, built):
         F.col("id").alias("key")
     )
     fn = register_contains_udf(spark, "qf_fpr", handle, cfg.seed)
-    fp = probes.where(fn("key")).count()
+    fp = probes.where(fn("key", probes)).count()
     # alpha * 2^-r with generous slack for the uniform-probe estimate
     assert fp / 200_000 <= cfg.theoretical_fpr() * 1.8 + 1e-4, fp
 
@@ -174,7 +174,7 @@ def test_distributed_delete_and_incremental_merge(spark, keys_df):
     fn = register_contains_udf(spark, "qf_del", handle, cfg.seed)
     kept = keys_df.subtract(dead)
     n_kept = kept.count()
-    found = kept.where(fn("key")).count()
+    found = kept.where(fn("key", kept)).count()
     # collision caveat: survivors sharing a full fingerprint with a
     # dead key vanish with it — expected count is
     # kept * dead / (shards * n_slots * 2^r); bound at ~4x

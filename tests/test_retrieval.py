@@ -37,7 +37,7 @@ def handle(spark, pairs_df):
 def test_members_exact(spark, pairs_df, handle):
     cfg, h = handle
     fn = register_lookup_udf(spark, "rv_exact", h, cfg.seed)
-    mismatches = pairs_df.where(fn("key") != F.col("val")).count()
+    mismatches = pairs_df.where(fn("key", pairs_df) != F.col("val")).count()
     assert mismatches == 0
 
 

@@ -213,7 +213,7 @@ def test_streaming_filter_probe_stateless(spark):
     stream = spark.readStream.schema("doc_id string, text string, seq long").parquet(
         f"{TMP}/src"
     )
-    clean = stream.where(~fn(F.md5("text")))
+    clean = stream.where(~fn(F.md5("text"), stream))
     _run_available_now(clean, f"{TMP}/ckpt", f"{TMP}/sink")
     got = spark.read.parquet(f"{TMP}/sink").toPandas()
     # zero FN: no contaminated (even-seq) doc survives; odd docs pass

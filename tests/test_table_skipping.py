@@ -343,7 +343,7 @@ def test_north_rule_end_to_end_sequences_table(spark, tmp_path):
     handle = bloom.ShardedBloom.from_df(cfg, shards)
     fn = register_contains_udf(spark, "nr_bf", handle, cfg.seed)
     members = stream.select("token").distinct()
-    assert members.where(fn("token", df=members)).count() == n
+    assert members.where(fn("token", members)).count() == n
 
 
 def test_skipping_read_over_snapshot_table(spark, li, tmp_path):
@@ -449,3 +449,64 @@ def test_schema_evolution_merge_schema(spark, li, tmp_path):
     assert set(got.columns) == {"l_orderkey", "lang"}
     assert got.count() == 150
     assert got.where(F.col("lang").isNull()).count() == 100
+
+
+def test_index_replay_after_crash_reads_each_file_once(spark, li, tmp_path, monkeypatch):
+    """A crash between the index-states append and the marker write
+    leaves the marker behind, so the replay appends the same files'
+    rows again. The duplicate index rows must not duplicate data rows:
+    pruned_read still equals filtering the full scan."""
+    from prefix_filter_spark.sources.file_index import pruned_read
+
+    tbl = str(tmp_path / "tbl")
+    idx_path = str(tmp_path / "idx")
+    cfg = FileIndexConfig(bits_per_key=12, expected_keys_per_file=4096)
+    ice.write_table(li.limit(1500).repartition(3), tbl, mode="overwrite")
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 3
+    ice.write_table(
+        li.limit(600).withColumn("l_orderkey", F.col("l_orderkey") + 10**9).repartition(2),
+        tbl,
+    )
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash before the marker write")
+
+    with monkeypatch.context() as m:
+        m.setattr(ice.os, "replace", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg)
+    # the states landed, the marker did not: the replay appends them again
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 2
+    idx = spark.read.parquet(idx_path)
+    assert idx.count() == 7 and idx.select("file").distinct().count() == 5
+
+    full = ice.read_table(spark, tbl)
+    keys = [
+        int(r[0])
+        for r in full.where(F.col("l_orderkey") >= 10**9).select("l_orderkey").limit(3).collect()
+    ] + [int(full.agg(F.min("l_orderkey")).first()[0])]
+    cols = ["l_orderkey", "l_linenumber"]
+    got = sorted(map(tuple, pruned_read(spark, idx, "l_orderkey", keys, cfg).select(*cols).collect()))
+    want = sorted(map(tuple, full.where(F.col("l_orderkey").isin(keys)).select(*cols).collect()))
+    assert got == want and len(want) > 0
+
+
+def test_table_path_with_space(spark, li, tmp_path):
+    """Manifest file lists hold percent-encoded URIs (space -> %20);
+    reads and index updates decode them, so a table under a path with a
+    space reads, indexes and prunes like any other."""
+    from prefix_filter_spark.sources.file_index import pruned_read
+
+    tbl = str(tmp_path / "my table")
+    idx_path = str(tmp_path / "my index")
+    cfg = FileIndexConfig(bits_per_key=12, expected_keys_per_file=4096)
+    ice.write_table(li.limit(800).repartition(2), tbl, mode="overwrite")
+    ice.write_table(li.limit(200).withColumn("l_orderkey", F.col("l_orderkey") + 10**9), tbl)
+    full = ice.read_table(spark, tbl)
+    assert full.count() == 1000
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == len(
+        ice.content_files(tbl)
+    )
+    key = int(full.agg(F.max("l_orderkey")).first()[0])
+    got = pruned_read(spark, spark.read.parquet(idx_path), "l_orderkey", [key], cfg)
+    assert got.count() == full.where(F.col("l_orderkey") == key).count() > 0

@@ -65,11 +65,7 @@ def main() -> int:
     probes = members.unionByName(uniform).cache()
     probes.count()
 
-    joined = probe.probe_via_join(
-        probes, "key", shards,
-        seed=cfg.seed, num_shards=cfg.num_shards,
-        probe_fn=probe.bloom_probe_fn(cfg),
-    )
+    joined = probe.probe_via_join(probes, "key", shards, cfg)
     # plan audit: no broadcast of the state side, cogroup evaluation
     plan = joined._jdf.queryExecution().executedPlan().toString()
     no_broadcast = "BroadcastExchange" not in plan
@@ -83,20 +79,16 @@ def main() -> int:
     join_s = min(join_s, time.perf_counter() - t0)
 
     # join-path member probes must all hit (zero FN through cogroup)
-    member_joined = probe.probe_via_join(
-        members, "key", shards,
-        seed=cfg.seed, num_shards=cfg.num_shards,
-        probe_fn=probe.bloom_probe_fn(cfg),
-    )
+    member_joined = probe.probe_via_join(members, "key", shards, cfg)
     member_found = member_joined.where("contains").count()
     zero_fn = member_found == n_probes
 
     # broadcast path on the same probes: answers must agree exactly
     handle = bloom.ShardedBloom.from_df(cfg, shards)
     fn = register_contains_udf(spark, "big_bf", handle, cfg.seed)
-    probes.limit(10_000).where(fn("key")).count()  # warm broadcast ship
+    probes.limit(10_000).where(fn("key", probes)).count()  # warm broadcast ship
     t0 = time.perf_counter()
-    bcast_found = probes.where(fn("key")).count()
+    bcast_found = probes.where(fn("key", probes)).count()
     bcast_s = time.perf_counter() - t0
     equal = bcast_found == join_found
 

@@ -164,7 +164,7 @@ def main() -> int:
         built, cfg, keys = _pf_build_df()
         handle = pfm.ShardedPrefixFilter.from_df(cfg, built)
         fn = register_contains_udf(spark, "audit_pf", handle, cfg.seed)
-        return keys.where(fn("key"))
+        return keys.where(fn("key", keys))
 
     def _rf_join_df():
         from pyspark.sql import functions as F

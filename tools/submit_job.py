@@ -56,7 +56,7 @@ def main() -> None:
     members = tokens.select("token").distinct()
     # token is int32: pass df so the probe widens to the same bigint
     # hash path the build used (plans.sharding.widen_key_col)
-    found = members.where(fn("token", df=members)).count()
+    found = members.where(fn("token", members)).count()
     print(
         json.dumps(
             {
