@@ -169,13 +169,13 @@ def bench_filters(spark, cores: int) -> dict[str, float]:
     uniform.count()
     # warm the broadcast (ship + unpickle per worker is a one-time cost
     # a long-lived cluster pays once), then best-of like the builds
-    uniform.limit(10_000).where(fn("key")).count()
+    uniform.limit(10_000).where(fn("key", uniform)).count()
     times["pf_probe_uniform"] = _timed_best(
-        lambda: uniform.where(fn("key")).count(), name="pf_probe_uniform", repeats=_FILTER_TRIALS
+        lambda: uniform.where(fn("key", uniform)).count(), name="pf_probe_uniform", repeats=_FILTER_TRIALS
     )
     yes = keys.sample(False, N_PROBES / N_KEYS, seed=7).cache()
     n_yes = yes.count()
-    times["pf_probe_yes"] = _timed_best(lambda: yes.where(fn("key")).count(), name="pf_probe_yes", repeats=_FILTER_TRIALS)
+    times["pf_probe_yes"] = _timed_best(lambda: yes.where(fn("key", yes)).count(), name="pf_probe_yes", repeats=_FILTER_TRIALS)
 
     # TrivialFilter control (reference wrappers.hpp:54-125): an
     # always-true vectorized probe over the same hashed-key column —
@@ -203,9 +203,9 @@ def bench_filters(spark, cores: int) -> dict[str, float]:
     )
     bh = bloom.ShardedBloom.from_df(bl_cfg, bloom.build_bloom(keys, "key", bl_cfg))
     bfn = register_contains_udf(spark, "bench_bf", bh, bl_cfg.seed)
-    uniform.limit(10_000).where(bfn("key")).count()
+    uniform.limit(10_000).where(bfn("key", uniform)).count()
     times["bloom_probe_uniform"] = _timed_best(
-        lambda: uniform.where(bfn("key")).count(), name="bloom_probe_uniform", repeats=_FILTER_TRIALS
+        lambda: uniform.where(bfn("key", uniform)).count(), name="bloom_probe_uniform", repeats=_FILTER_TRIALS
     )
 
     # companion filters (reference §2.3 family)
@@ -255,9 +255,9 @@ def bench_filters(spark, cores: int) -> dict[str, float]:
     )
     rh = rbm.ShardedRibbon.from_df(rb_cfg, rbm.build_ribbon(keys, "key", rb_cfg))
     rfn = register_contains_udf(spark, "bench_ribbon", rh, rb_cfg.seed)
-    uniform.limit(10_000).where(rfn("key")).count()
+    uniform.limit(10_000).where(rfn("key", uniform)).count()
     times["ribbon_probe_uniform"] = _timed_best(
-        lambda: uniform.where(rfn("key")).count(), name="ribbon_probe_uniform", repeats=_FILTER_TRIALS
+        lambda: uniform.where(rfn("key", uniform)).count(), name="ribbon_probe_uniform", repeats=_FILTER_TRIALS
     )
     from prefix_filter_spark.sketches import quotient as qfm
 
@@ -267,15 +267,15 @@ def bench_filters(spark, cores: int) -> dict[str, float]:
     )
     qh = qfm.ShardedQuotient.from_df(qf_cfg, qfm.build_quotient(keys, "key", qf_cfg))
     qfn = register_contains_udf(spark, "bench_qf", qh, qf_cfg.seed)
-    uniform.limit(10_000).where(qfn("key")).count()
+    uniform.limit(10_000).where(qfn("key", uniform)).count()
     times["qf_probe_uniform"] = _timed_best(
-        lambda: uniform.where(qfn("key")).count(), name="qf_probe_uniform", repeats=_FILTER_TRIALS
+        lambda: uniform.where(qfn("key", uniform)).count(), name="qf_probe_uniform", repeats=_FILTER_TRIALS
     )
     xh = xorm.ShardedXor.from_df(xr_cfg, xorm.build_xor(keys, "key", xr_cfg))
     xfn = register_contains_udf(spark, "bench_xor", xh, xr_cfg.seed)
-    uniform.limit(10_000).where(xfn("key")).count()
+    uniform.limit(10_000).where(xfn("key", uniform)).count()
     times["xor_probe_uniform"] = _timed_best(
-        lambda: uniform.where(xfn("key")).count(), name="xor_probe_uniform", repeats=_FILTER_TRIALS
+        lambda: uniform.where(xfn("key", uniform)).count(), name="xor_probe_uniform", repeats=_FILTER_TRIALS
     )
 
     # value sketches over the same stream
@@ -809,9 +809,9 @@ def scaling_run(cores: int) -> tuple[float, float]:
     fn = register_contains_udf(spark, "scale_pf", handle, cfg.seed)
     probes = _keys_df(spark, N_SCALE, offset=10**10).cache()
     probes.count()
-    probes.limit(10_000).where(fn("key")).count()  # warm the broadcast
+    probes.limit(10_000).where(fn("key", probes)).count()  # warm the broadcast
     t_probe = min(
-        _timed(lambda: probes.where(fn("key")).count()) for _ in range(reps)
+        _timed(lambda: probes.where(fn("key", probes)).count()) for _ in range(reps)
     )
     spark.stop()
     return N_SCALE / t_build, N_SCALE / t_probe
